@@ -8,7 +8,7 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 The actual surface lives in ``nass_summary_spark.plans.queries``;
 this module just adapts it to the driver contract.
 
-Driver-window selection (r10)
+Driver-window selection (r12)
 -----------------------------
 The external gate samples the FIRST 50 entries of ``queries()``.
 The library registry (``plans/queries.py`` QUERIES) stays in natural
@@ -16,21 +16,20 @@ registration order and is never mutated; the gate-facing ordering is
 the explicit list below, chosen so every query gets driver-grade
 evidence across rounds:
 
-* r1-r9 driver-verified 228 of the 256 queries registered through r9
-  at least once (CORRECTNESS_r01-r09 — zero failures ever; all 50 r9
-  rows green).
-* ``_DRIVER_WINDOW_R10`` is the rotation VERDICT r9 item 1
-  prescribed: the 28 r9 widening queries that registered past the
-  r9 gate and therefore have no driver row yet (every one
-  judge-oracle-verified exact in the r9 VERDICT session), then the
-  FIRST 22 in name order of the 28-query cohort whose newest driver
-  row is r5. After this round the stalest driver evidence is r5 for
-  exactly 6 queries (unattributed_clicks, weighted_sample,
+* r1-r9 driver-verified 228 of the 256 queries registered through
+  r9 (CORRECTNESS_r01-r09); r10 and r11 both sampled the r10 window
+  (the 28 r9 debuts, then the first 22 r5-stale queries by name).
+* ``_DRIVER_WINDOW_R12`` puts three groups first, in this order:
+  the persisted-index queries whose operators moved onto the shared
+  ``operators/index_store`` (``dedup_incremental_lsh``,
+  ``stream_dedup`` and the three rows-only index probes); the r10
+  rewrite radius (record linkage clusters, cluster eval, canonical
+  entities, the quality-classifier train/eval family, classifier
+  calibration, threshold selection, dedup components); and the six
+  r5-stale queries (unattributed_clicks, weighted_sample,
   whiten_embeddings, winsorized_stats, woe_iv,
-  yield_by_class_pivot) — they ride the r11 rotation.
-* New r10 widening queries register PAST the window (their evidence
-  is CORRECTNESS_LOCAL + pytest until the r11 rotation debuts
-  them).
+  yield_by_class_pivot). That is 20 explicit slots; the other 30 of
+  the gate's 50 are the first registry entries not listed.
 * Everything else follows in natural registration order, so
   ``tools/verify_oracle.py`` (which checks ALL entries →
   CORRECTNESS_LOCAL.md) sees the identical ordering and the two
@@ -45,34 +44,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nass_summary_spark.plans.queries import ORACLES, QUERIES
 
-# The 50 gate-checked slots for round 10 (the rotation VERDICT r9
-# item 1 prescribed): the 28 never-driver-checked r9 debuts first,
-# then the first 22 of the 28-query r5-stale cohort in name order
-# (the remaining 6 ride in r11). Exactly 50 explicit slots.
-_DRIVER_WINDOW_R10: list[str] = [
-    # -- 28 r9 debuts: no driver row yet -------------------------------
-    "image_neardup", "audio_features", "langid_train", "langid_eval",
-    "mixture_schedule", "quantile_sketch_rollup", "audio_neardup",
-    "ks_drift", "spearman_corr", "acf_lags", "countmin_rollup",
-    "link_prediction", "bpe_merges", "bpe_segment_stats",
-    "hll_overlap", "ucb_allocation", "emd_drift", "freq_cap_gate",
-    "prefix_filter_join", "zorder_layout", "neyman_allocation",
-    "sample_diversity", "drift_panel", "equidepth_histogram",
-    "pseudonymize_keys", "linkage_review_queue", "hard_negatives",
-    "dp_group_counts",
-    # -- newest driver row is r5 (first 22 in name order) ---------------
-    "irrigation_split", "k_anonymity", "keep_best_duplicate",
-    "key_skew_profile", "late_data_metrics", "mann_whitney_u",
-    "multilevel_fallback", "multimodal_decode_jpeg",
-    "multimodal_features", "nearest_event", "nearest_zone",
-    "negative_sampling", "novelty_scores", "quantile_normalize",
-    "range_join_tiers", "readability_scores", "remove_spans",
-    "rollup_unit_price", "seasonal_anomalies", "session_paths",
-    "table_checksum", "total_and_sum_merge",
+# The explicit head of the gate-checked window (see the module
+# docstring): index-store blast radius, r10 rewrite radius, r5-stale.
+_DRIVER_WINDOW_R12: list[str] = [
+    # -- persisted-index family (operators/index_store) ----------------
+    "dedup_incremental_lsh", "stream_dedup", "ann_index_probe",
+    "pq_index_probe", "ivfpq_index_probe",
+    # -- r10 rewrite radius --------------------------------------------
+    "record_linkage_clusters", "cluster_eval", "canonical_entities",
+    "quality_classifier_train", "quality_classifier_train_scored",
+    "quality_classifier_eval", "classifier_calibration",
+    "threshold_select", "dedup_components",
+    # -- newest driver row is r5 ----------------------------------------
+    "unattributed_clicks", "weighted_sample", "whiten_embeddings",
+    "winsorized_stats", "woe_iv", "yield_by_class_pivot",
 ]
+
+
 def _ordered_names() -> list[str]:
-    window = [n for n in _DRIVER_WINDOW_R10 if n in QUERIES]
-    rest = [n for n in QUERIES if n not in _DRIVER_WINDOW_R10]
+    window = [n for n in _DRIVER_WINDOW_R12 if n in QUERIES]
+    rest = [n for n in QUERIES if n not in _DRIVER_WINDOW_R12]
     return window + rest
 
 

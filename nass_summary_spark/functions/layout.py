@@ -22,11 +22,13 @@ __all__ = ["spread_narrow_scan", "pushdown_barrier"]
 
 
 def pushdown_barrier(col: Column) -> Column:
-    """``col + 0.0 * rand(0)`` — a numerically EXACT no-op
-    (``x + 0.0 * r == x`` for every finite double ``r`` and every
-    double ``x``; rand ∈ [0, 1)) that marks the expression
-    nondeterministic, so a filter referencing it can be neither
-    pushed below an exchange nor inlined into a second evaluation.
+    """``col + 0.0 * rand(0)`` — a numerically exact no-op for every
+    double ``x`` except ``-0.0`` (rand ∈ [0, 1), so ``0.0 * r`` is
+    ``+0.0`` and ``x + 0.0 == x``; but ``-0.0 + 0.0`` is ``+0.0``, so
+    a negative zero comes back positive — equal under ``==``, not
+    bit-identical) that marks the expression nondeterministic, so a
+    filter referencing it can be neither pushed below an exchange
+    nor inlined into a second evaluation.
 
     This is the guide §4.4 duplicated-evaluation fix applied to JVM
     expressions: a filter on an expensive computed column otherwise

@@ -36,10 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nass_summary_spark.functions.smalldf import local_struct_df
-from pyspark.sql.functions import broadcast
-
 from nass_summary_spark.functions.vectors import cosine_similarity
+from nass_summary_spark.operators import index_store as store
 from nass_summary_spark.operators.similarity import (
     assign_cells,
     kmeans_train,
@@ -65,43 +63,32 @@ def build_ann_index(
     Lloyd iterations over every vector would dominate build cost for
     zero recall gain. ENCODING still covers the full corpus (one
     assignment map stage + the partitioned write)."""
-    spark = df.sparkSession
-    train = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_rows)
+    vecs = store.id_vec(df, id_col, vec_col)
+    centroids = _train(vecs, k_cells, n_iter, train_rows)
+    model = store.model_frame(df.sparkSession, store.CENTROID_KEYS, centroids)
+    store.write_tables(
+        index_path, {"centroids": model, "codes": _assign(vecs, centroids)}
     )
-    centroids, _ = kmeans_train(train, id_col, vec_col, k=k_cells, n_iter=n_iter)
-    rows = [
-        (int(c), int(p), float(v))
-        for c, vec in enumerate(centroids)
-        for p, v in enumerate(vec)
-    ]
-    local_struct_df(
-        spark, "cell int, pos int, value double", rows
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    (
-        assign_cells(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "vec",
-            centroids,
-        )
-        .select("id", "vec", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/codes")
-    )
+
+
+def _train(
+    vecs: DataFrame, k_cells: int, n_iter: int, train_rows: int
+) -> list[list[float]]:
+    train = vecs.orderBy(F.xxhash64(F.col("id"))).limit(train_rows)
+    centroids, _ = kmeans_train(train, "id", "vec", k=k_cells, n_iter=n_iter)
+    return centroids
+
+
+def _assign(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    return assign_cells(vecs, "vec", centroids).select("id", "vec", "cell")
 
 
 def load_centroids(spark: SparkSession, index_path: str) -> list[list[float]]:
     """Read the k×dim quantizer back (model-sized collect)."""
-    rows = spark.read.parquet(f"{index_path}/centroids").collect()
-    k = max(r["cell"] for r in rows) + 1
-    dim = max(r["pos"] for r in rows) + 1
-    out = [[0.0] * dim for _ in range(k)]
-    for r in rows:
-        out[r["cell"]][r["pos"]] = r["value"]
-    return out
+    return store.read_model(
+        spark, f"{index_path}/centroids", store.CENTROID_KEYS,
+        (None, None), "ann_index",
+    )
 
 
 def extend_ann_index(
@@ -120,11 +107,10 @@ def extend_ann_index(
     make reads fail nondeterministically by file order, and a silent
     cast would change stored values invisibly — the caller must cast
     explicitly."""
-    stored_vec = (
-        df.sparkSession.read.parquet(f"{index_path}/codes")
-        .schema["vec"].dataType
-    )
-    new_vec = df.select(F.col(vec_col).alias("vec")).schema["vec"].dataType
+    vecs = store.id_vec(df, id_col, vec_col)
+    stored = store.read_codes(df.sparkSession, index_path)
+    stored_vec = stored.schema["vec"].dataType
+    new_vec = vecs.schema["vec"].dataType
     if new_vec != stored_vec:
         raise ValueError(
             f"ann_index vector type mismatch at {index_path}: stored "
@@ -134,16 +120,8 @@ def extend_ann_index(
             "first"
         )
     centroids = load_centroids(df.sparkSession, index_path)
-    (
-        assign_cells(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "vec",
-            centroids,
-        )
-        .select("id", "vec", "cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/codes")
+    store.write_tables(
+        index_path, {"codes": _assign(vecs, centroids)}, mode="append"
     )
 
 
@@ -215,47 +193,19 @@ def rebalance_ann_index(
 
     Returns ``{"rows", "imbalance_before", "imbalance_after"}`` for
     the caller's audit log."""
-    from nass_summary_spark.functions.fsio import remove_dir, swap_in
-
     before = cell_balance_audit(spark, index_path)
     if k_cells is None:
         k_cells = before["k_cells"]
-    codes_path = f"{index_path}/codes"
-    cent_path = f"{index_path}/centroids"
-    codes = spark.read.parquet(codes_path).select("id", "vec")
+    codes = store.read_codes(spark, index_path).select("id", "vec")
     rows = codes.count()
-    train = codes.orderBy(F.xxhash64(F.col("id"))).limit(train_rows)
-    centroids, _ = kmeans_train(train, "id", "vec", k=k_cells, n_iter=n_iter)
-
-    tmp_codes = codes_path + "__rebalancing"
-    (
-        assign_cells(codes, "vec", centroids)
-        .select("id", "vec", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp_codes)
+    centroids = _train(codes, k_cells, n_iter, train_rows)
+    model = store.model_frame(spark, store.CENTROID_KEYS, centroids)
+    store.validated_rebuild(
+        spark, index_path,
+        {"codes": _assign(codes, centroids), "centroids": model},
+        rows, "rebalance_ann_index", "__rebalancing", "__pre_rebalance",
+        keep_backup,
     )
-    rewritten = spark.read.parquet(tmp_codes).count()
-    if rewritten != rows:
-        remove_dir(spark, tmp_codes)
-        raise RuntimeError(
-            f"rebalance_ann_index validation failed for {index_path}: "
-            f"re-encoded {rewritten} rows, expected {rows}; live index "
-            "left untouched"
-        )
-    tmp_cent = cent_path + "__rebalancing"
-    local_struct_df(
-        spark,
-        "cell int, pos int, value double",
-        [
-            (int(c), int(p), float(v))
-            for c, vec in enumerate(centroids)
-            for p, v in enumerate(vec)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_cent)
-
-    swap_in(spark, codes_path, tmp_codes, "__pre_rebalance", keep_backup)
-    swap_in(spark, cent_path, tmp_cent, "__pre_rebalance", keep_backup)
     after = cell_balance_audit(spark, index_path)
     return {
         "rows": rows,
@@ -305,13 +255,9 @@ def ann_index_probe(
         F.col(vec_col).alias("__qvec"),
         F.explode(F.transform(probed, lambda s: s["cell"])).alias("cell"),
     )
-    codes = spark.read.parquet(f"{index_path}/codes")
-    if exclude_ids is not None:
-        codes = codes.join(
-            broadcast(exclude_ids.select("id")), "id", "left_anti"
-        )
+    codes = store.read_codes(spark, index_path, exclude_ids=exclude_ids)
     cand = (
-        codes.join(broadcast(q), on="cell")
+        codes.join(F.broadcast(q), on="cell")
         .where(F.col("id") != F.col("query_id"))
         .dropDuplicates(["query_id", "id"])
     )

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nass_summary_spark.operators import index_store as store
 from nass_summary_spark.operators.dedup import (
     band_entries,
     estimated_jaccard,
@@ -49,18 +50,6 @@ def _paths(index_path: str) -> tuple[str, str]:
     return f"{index_path}/sigs", f"{index_path}/bands"
 
 
-def _write_params(
-    spark: SparkSession, index_path: str, n: int, num_perm: int, bands: int
-) -> None:
-    from nass_summary_spark.functions.smalldf import local_struct_df
-
-    local_struct_df(
-        spark,
-        "n int, num_perm int, bands int",
-        [(int(n), int(num_perm), int(bands))],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/params")
-
-
 def _check_params(
     spark: SparkSession, index_path: str, n: int, num_perm: int, bands: int
 ) -> None:
@@ -69,8 +58,7 @@ def _check_params(
     zip_with'd against stored 32-perm sigs null-pads and roughly
     halves every est_jaccard) — so the index records its parameters
     and mismatches fail loudly."""
-    row = spark.read.parquet(f"{index_path}/params").first()
-    got = (row["n"], row["num_perm"], row["bands"])
+    got = tuple(store.read_row(spark, f"{index_path}/params").values())
     want = (int(n), int(num_perm), int(bands))
     if got != want:
         raise ValueError(
@@ -93,7 +81,10 @@ def build_minhash_index(
     ``index_path`` (``sigs/``: (id, sig); ``bands/``: (id, band,
     bucket) partitioned by band, range-clustered on bucket)."""
     sig_path, band_path = _paths(index_path)
-    _write_params(df.sparkSession, index_path, n, num_perm, bands)
+    params = store.row_frame(
+        df.sparkSession, "n int, num_perm int, bands int", n, num_perm, bands
+    )
+    store.write_tables(index_path, {"params": params})
     sig = minhash_signatures(df, id_col, text_col, n=n, num_perm=num_perm)
     # the band entries derive from the signatures; persist so the
     # shingle scan runs once for both writes, then release

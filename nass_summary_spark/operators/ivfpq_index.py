@@ -41,14 +41,16 @@ method from public literature (Jégou TPAMI'11).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from nass_summary_spark.functions.smalldf import local_struct_df
-
-from nass_summary_spark.operators.pq import (
-    _ivfpq_encode,
-    _ivfpq_rank,
-    _ivfpq_train,
+from nass_summary_spark.operators import index_store as store
+from nass_summary_spark.operators.pq_index import (
+    FITNESS_SAMPLE,  # re-exported: the family's one fitness sample bound
+    _audit,
+    _build,
+    _extend,
+    _load,
+    _probe,
+    _retrain,
 )
 
 
@@ -69,138 +71,11 @@ def build_ivfpq_index(
     corpus (cell-partitioned). Training is sample-bounded; ENCODING
     covers the full corpus (one Arrow map stage + the partitioned
     write)."""
-    if dim % m:
-        raise ValueError("dim must be divisible by m")
-    spark = df.sparkSession
-    coarse_l, books_l = _ivfpq_train(
-        df, id_col, vec_col, dim, n_cells=k_cells, m=m, ksub=ksub,
-        n_iter=n_iter, sample_size=sample_size,
+    _build(
+        store.id_vec(df, id_col, vec_col), index_path,
+        {"dim": dim, "m": m, "ksub": ksub, "k_cells": k_cells},
+        n_iter, sample_size,
     )
-    local_struct_df(
-        spark,
-        "cell int, pos int, value double",
-        [
-            (int(c), int(p), float(v))
-            for c, cent in enumerate(coarse_l)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books_l)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    local_struct_df(
-        spark,
-        "dim int, m int, ksub int, k_cells int",
-        [(int(dim), int(m), int(ksub), int(k_cells))],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/params")
-    (
-        _ivfpq_encode(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "id", "vec", coarse_l, books_l,
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/codes")
-    )
-    _write_fitness(
-        spark, index_path,
-        _ivfpq_mse(df, id_col, vec_col, coarse_l, books_l, FITNESS_SAMPLE),
-        FITNESS_SAMPLE,
-    )
-
-
-#: fitness sample bound — see pq_index.FITNESS_SAMPLE (the fitness
-#: job runs inside every build and must stay cheap)
-FITNESS_SAMPLE = 4096
-
-
-def _ivfpq_mse(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    coarse_l: list[list[float]],
-    books_l: list[list[list[float]]],
-    sample_size: int = FITNESS_SAMPLE,
-) -> float:
-    """Mean RESIDUAL quantization error of the stored model over the
-    deterministic training-rule sample: assign each sampled vector to
-    its nearest coarse cell, subtract that centroid, and sum the
-    per-subspace distances to the nearest residual codeword —
-    ||v − (centroid[cell] + reconstruction)||². One Arrow-batched
-    numpy pass (the ``_ivfpq_encode`` matrix shapes; Spark HOFs run
-    interpreted and measured ~100× slower here), one sample-bounded
-    job. Per-row errors have a fixed numpy reduction order, so
-    build-time and audit-time calls on the same corpus return the
-    identical double."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    dsub = len(books_l[0][0])
-    coarse = [list(map(float, c)) for c in coarse_l]
-    bks = [[list(map(float, c)) for c in b] for b in books_l]
-
-    def _err(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        cc = np.asarray(coarse)
-        cbs = [np.asarray(b) for b in bks]
-        x = np.vstack(vs.to_numpy()).astype("float64")
-        cells = ((x[:, None, :] - cc[None]) ** 2).sum(axis=2).argmin(axis=1)
-        rv = x - cc[cells]
-        out = np.zeros(len(x))
-        for s, cb in enumerate(cbs):
-            sub = rv[:, s * dsub : (s + 1) * dsub]
-            d2 = ((sub[:, None, :] - cb[None]) ** 2).sum(axis=2)
-            out += d2.min(axis=1)
-        return pd.Series(out)
-
-    _err.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    udf = pandas_udf(_err, "double").asNondeterministic()
-    sample = (
-        df.select(
-            F.col(vec_col).alias("__v"),
-            F.xxhash64(F.col(id_col)).alias("__h"),
-        )
-        .orderBy("__h")
-        .limit(int(sample_size))
-    )
-    row = (
-        sample.select(udf(F.col("__v")).alias("__e"))
-        .agg(F.avg("__e").alias("mse"))
-        .collect()[0]
-    )
-    return float(row["mse"]) if row["mse"] is not None else 0.0
-
-
-def _write_fitness(
-    spark: SparkSession, index_path: str, mse: float, sample_n: int,
-    suffix: str = "",
-) -> None:
-    local_struct_df(
-        spark, "mse double, sample_n bigint",
-        [(float(mse), int(sample_n))],
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{index_path}/fitness{suffix}"
-    )
-
-
-def _read_fitness(spark: SparkSession, index_path: str) -> dict:
-    try:
-        r = spark.read.parquet(f"{index_path}/fitness").collect()[0]
-    except Exception as exc:
-        raise ValueError(
-            f"ivfpq_index at {index_path} has no fitness sidecar "
-            "(built before drift auditing existed) — "
-            "retrain_ivfpq_index or rebuild to establish the reference"
-        ) from exc
-    return {"mse": float(r["mse"]), "sample_n": int(r["sample_n"])}
 
 
 def ivfpq_codebook_audit(
@@ -208,7 +83,6 @@ def ivfpq_codebook_audit(
     id_col: str,
     vec_col: str,
     index_path: str,
-    sample_size: int = 4096,
 ) -> dict:
     """Model-fitness drift audit for the persisted IVFADC index:
     re-measure the stored coarse-quantizer + residual-codebook mean
@@ -218,15 +92,7 @@ def ivfpq_codebook_audit(
     longer fit the ingest distribution (silent ADC recall decay) —
     :func:`retrain_ivfpq_index` is due. Needs the raw corpus; cost
     is one sample-bounded job."""
-    spark = df.sparkSession
-    coarse_l, books_l, _params = load_ivfpq_model(spark, index_path)
-    ref = _read_fitness(spark, index_path)
-    now = _ivfpq_mse(df, id_col, vec_col, coarse_l, books_l, sample_size)
-    return {
-        "mse_now": now,
-        "mse_build": ref["mse"],
-        "drift_ratio": (now / ref["mse"]) if ref["mse"] > 0.0 else 1.0,
-    }
+    return _audit(store.id_vec(df, id_col, vec_col), index_path, ivf=True)
 
 
 def retrain_ivfpq_index(
@@ -249,78 +115,10 @@ def retrain_ivfpq_index(
     codes cannot be decoded back to vectors.
 
     Returns ``{"rows", "mse_before", "mse_after"}``."""
-    from nass_summary_spark.functions.fsio import remove_dir, swap_in
-
-    spark = df.sparkSession
-    old_coarse, old_books, params = load_ivfpq_model(spark, index_path)
-    mse_before = _ivfpq_mse(
-        df, id_col, vec_col, old_coarse, old_books, FITNESS_SAMPLE
+    return _retrain(
+        store.id_vec(df, id_col, vec_col), index_path, n_iter, sample_size,
+        keep_backup, ivf=True,
     )
-    coarse_l, books_l = _ivfpq_train(
-        df, id_col, vec_col, params["dim"], n_cells=params["k_cells"],
-        m=params["m"], ksub=params["ksub"], n_iter=n_iter,
-        sample_size=sample_size,
-    )
-    tmp_codes = f"{index_path}/codes__retraining"
-    (
-        _ivfpq_encode(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "id", "vec", coarse_l, books_l,
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp_codes)
-    )
-    rows = df.count()
-    rewritten = spark.read.parquet(tmp_codes).count()
-    if rewritten != rows:
-        remove_dir(spark, tmp_codes)
-        raise RuntimeError(
-            f"retrain_ivfpq_index validation failed for {index_path}: "
-            f"re-encoded {rewritten} rows, expected {rows}; live index "
-            "left untouched"
-        )
-    tmp_cent = f"{index_path}/centroids__retraining"
-    local_struct_df(
-        spark,
-        "cell int, pos int, value double",
-        [
-            (int(c), int(p), float(v))
-            for c, cent in enumerate(coarse_l)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_cent)
-    tmp_books = f"{index_path}/codebooks__retraining"
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books_l)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_books)
-    mse_after = _ivfpq_mse(
-        df, id_col, vec_col, coarse_l, books_l, FITNESS_SAMPLE
-    )
-    _write_fitness(
-        spark, index_path, mse_after, FITNESS_SAMPLE, suffix="__retraining"
-    )
-    swap_in(spark, f"{index_path}/centroids", tmp_cent,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/codebooks", tmp_books,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/codes", tmp_codes,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/fitness",
-            f"{index_path}/fitness__retraining",
-            "__pre_retrain", keep_backup)
-    return {
-        "rows": rows,
-        "mse_before": mse_before,
-        "mse_after": mse_after,
-    }
 
 
 def load_ivfpq_model(
@@ -330,54 +128,7 @@ def load_ivfpq_model(
     books_l, params)``. Fails loudly when the stored relations'
     geometry disagrees with the params sidecar — a mixed-generation
     index would otherwise score with misaligned tables."""
-    p = spark.read.parquet(f"{index_path}/params").collect()[0]
-    params = {
-        "dim": p["dim"], "m": p["m"], "ksub": p["ksub"],
-        "k_cells": p["k_cells"],
-    }
-    dsub = params["dim"] // params["m"]
-    crows = spark.read.parquet(f"{index_path}/centroids").collect()
-    brows = spark.read.parquet(f"{index_path}/codebooks").collect()
-    if (
-        len(crows) != params["k_cells"] * params["dim"]
-        or len(brows) != params["m"] * params["ksub"] * dsub
-        or any(r["cell"] >= params["k_cells"] for r in crows)
-        or any(
-            r["subspace"] >= params["m"]
-            or r["code"] >= params["ksub"]
-            or r["pos"] >= dsub
-            for r in brows
-        )
-    ):
-        raise ValueError(
-            f"ivfpq_index geometry mismatch at {index_path}: params say "
-            f"(dim={params['dim']}, m={params['m']}, ksub={params['ksub']},"
-            f" k_cells={params['k_cells']}) but centroids/codebooks have "
-            f"{len(crows)}/{len(brows)} entries — the index mixes "
-            "generations; rebuild it"
-        )
-    coarse_l = [[0.0] * params["dim"] for _ in range(params["k_cells"])]
-    for r in crows:
-        coarse_l[r["cell"]][r["pos"]] = r["value"]
-    books_l = [
-        [[0.0] * dsub for _ in range(params["ksub"])]
-        for _ in range(params["m"])
-    ]
-    for r in brows:
-        books_l[r["subspace"]][r["code"]][r["pos"]] = r["value"]
-    return coarse_l, books_l, params
-
-
-def _check_codes_geometry(codes: DataFrame, params: dict, index_path: str) -> None:
-    want = {f"code{s}" for s in range(params["m"])}
-    have = {c for c in codes.columns if c.startswith("code")}
-    if have != want or "cell" not in codes.columns:
-        raise ValueError(
-            f"ivfpq_index geometry mismatch at {index_path}: params say "
-            f"m={params['m']} but the codes table has columns "
-            f"{sorted(have)} (cell {'present' if 'cell' in codes.columns else 'MISSING'})"
-            " — the index mixes generations; rebuild it"
-        )
+    return _load(spark, index_path, ivf=True)
 
 
 def extend_ivfpq_index(
@@ -390,18 +141,7 @@ def extend_ivfpq_index(
     STORED model (codes must stay comparable to what queries
     ADC-score against). Under drift, re-train by rebuilding — the
     IVF rebalance analog."""
-    coarse_l, books_l, _params = load_ivfpq_model(
-        df.sparkSession, index_path
-    )
-    (
-        _ivfpq_encode(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "id", "vec", coarse_l, books_l,
-        )
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/codes")
-    )
+    _extend(store.id_vec(df, id_col, vec_col), index_path, ivf=True)
 
 
 def ivfpq_index_probe(
@@ -430,15 +170,7 @@ def ivfpq_index_probe(
     ``exclude_ids`` (single ``id`` column, batch-sized broadcast)
     removes stored codes BEFORE ranking — the crash-replay contract
     of the index family."""
-    coarse_l, books_l, params = load_ivfpq_model(spark, index_path)
-    codes = spark.read.parquet(f"{index_path}/codes")
-    _check_codes_geometry(codes, params, index_path)
-    if exclude_ids is not None:
-        codes = codes.join(
-            F.broadcast(exclude_ids.select("id")), "id", "left_anti"
-        )
-    ranked = _ivfpq_rank(
-        spark, codes, queries, id_col, vec_col, coarse_l, books_l,
-        nprobe=nprobe, collect_queries=collect_queries, code_id_col="id",
+    return _probe(
+        spark, queries, id_col, vec_col, index_path, k, collect_queries,
+        exclude_ids, nprobe=nprobe,
     )
-    return ranked.where(F.col("rnk") <= k)

@@ -36,6 +36,7 @@ double arithmetic DuckDB replays bit-for-bit.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
@@ -431,6 +432,13 @@ def _em_params_frame(
     — shared by :func:`fellegi_sunter_em` (unpivots it) and
     :func:`fellegi_sunter_em_scores` (broadcasts it back onto the
     candidates)."""
+    # field names are pasted into SQL text and a DDL schema string
+    for f in fields:
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", f):
+            raise ValueError(
+                f"EM field name {f!r} is not a plain identifier "
+                "([A-Za-z_][A-Za-z0-9_]*)"
+            )
     spark = candidates.sparkSession
     agree_cols = [f"agree_{f}" for f in fields]
     # the only full-data pass: trillions of pairs fold into ≤2^F rows

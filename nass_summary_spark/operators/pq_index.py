@@ -44,9 +44,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nass_summary_spark.functions.smalldf import local_struct_df
+from nass_summary_spark.operators import index_store as store
+from nass_summary_spark.operators.pq import (
+    _adc_rank,
+    _ivfpq_encode,
+    _ivfpq_rank,
+    _ivfpq_train,
+    pq_encode,
+    pq_train,
+)
 
-from nass_summary_spark.operators.pq import pq_encode, pq_train
+#: fitness sample bound — decoupled from the (larger) train sample:
+#: an MSE reference needs a few thousand vectors, and the fitness job
+#: runs inside every build, so it must stay cheap (the first cut ran
+#: the interpreted-HOF distance tables over the train-sized sample
+#: and doubled the toy-scale build; Arrow + 4096 rows is ~100×
+#: lighter and statistically identical)
+FITNESS_SAMPLE = 4096
 
 
 def build_pq_index(
@@ -64,90 +78,102 @@ def build_pq_index(
     codebooks + params + the encoded corpus. Training cost is
     sample-bounded; ENCODING covers the full corpus (one Arrow map
     stage + the write)."""
-    spark = df.sparkSession
-    books = pq_train(
-        df, id_col, vec_col, dim, m=m, ksub=ksub, n_iter=n_iter,
-        sample_size=sample_size,
-    )
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    local_struct_df(
-        spark, "dim int, m int, ksub int", [(int(dim), int(m), int(ksub))]
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/params")
-    (
-        pq_encode(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-                  "id", "vec", books)
-        .write.mode("overwrite")
-        .parquet(f"{index_path}/codes")
-    )
-    _write_fitness(
-        spark, index_path,
-        _pq_mse(df, id_col, vec_col, books, FITNESS_SAMPLE),
-        FITNESS_SAMPLE,
+    _build(
+        store.id_vec(df, id_col, vec_col), index_path,
+        {"dim": dim, "m": m, "ksub": ksub}, n_iter, sample_size,
     )
 
 
-#: fitness sample bound — decoupled from the (larger) train sample:
-#: an MSE reference needs a few thousand vectors, and the fitness job
-#: runs inside every build, so it must stay cheap (the first cut ran
-#: the interpreted-HOF distance tables over the train-sized sample
-#: and doubled the toy-scale build; Arrow + 4096 rows is ~100×
-#: lighter and statistically identical)
-FITNESS_SAMPLE = 4096
+# The PQ family body below is shared with ivfpq_index: a model is
+# ``(coarse, books, params)`` where ``coarse`` is the IVFADC coarse
+# quantizer (None for plain PQ, whose params carry no ``k_cells``);
+# ``vecs`` is the corpus as ``(id, vec)`` (``index_store.id_vec``).
+_WHAT = {False: "pq_index", True: "ivfpq_index"}
 
 
-def _pq_mse(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    books: list[list[list[float]]],
-    sample_size: int = FITNESS_SAMPLE,
-) -> float:
-    """Mean quantization error of ``books`` over the deterministic
-    training-rule sample of ``df`` (``orderBy(xxhash64(id)).limit``)
-    — per vector, the summed per-subspace distance to the NEAREST
-    centroid, i.e. ||v − reconstruction(encode(v))||². Evaluated as
-    one Arrow-batched numpy pass (the same batch×ksub distance
-    matrix shape ``pq_encode`` uses — Spark HOFs run interpreted and
+def _build(
+    vecs: DataFrame, index_path: str, params: dict, n_iter: int, sample_size: int
+) -> None:
+    if params["dim"] % params["m"]:
+        raise ValueError("dim must be divisible by m")
+    schema = ", ".join(f"{k} int" for k in params)
+    sidecar = store.row_frame(vecs.sparkSession, schema, *params.values())
+    tables, _mse = _generation(vecs, params, n_iter, sample_size)
+    store.write_tables(index_path, {"params": sidecar, **tables})
+
+
+def _generation(
+    vecs: DataFrame, params: dict, n_iter: int, sample_size: int
+) -> tuple[dict[str, DataFrame], float]:
+    """Train a model under the geometry ``params`` (IVFADC when it
+    has ``k_cells``) and return the tables it writes, in swap order
+    (model, codes, fitness), with its fitness MSE."""
+    spark = vecs.sparkSession
+    train_kw = dict(
+        m=params["m"], ksub=params["ksub"], n_iter=n_iter, sample_size=sample_size
+    )
+    tables = {}
+    if "k_cells" in params:
+        coarse, books = _ivfpq_train(
+            vecs, "id", "vec", params["dim"], n_cells=params["k_cells"],
+            **train_kw,
+        )
+        tables["centroids"] = store.model_frame(
+            spark, store.CENTROID_KEYS, coarse
+        )
+    else:
+        coarse = None
+        books = pq_train(vecs, "id", "vec", params["dim"], **train_kw)
+    mse = _quant_mse(vecs, books, coarse)
+    tables["codebooks"] = store.model_frame(spark, store.CODEBOOK_KEYS, books)
+    tables["codes"] = _encode(vecs, coarse, books)
+    tables["fitness"] = store.fitness_frame(spark, mse, FITNESS_SAMPLE)
+    return tables, mse
+
+
+def _encode(vecs: DataFrame, coarse, books) -> DataFrame:
+    if coarse is None:
+        return pq_encode(vecs, "id", "vec", books)
+    return _ivfpq_encode(vecs, "id", "vec", coarse, books)
+
+
+def _quant_mse(vecs: DataFrame, books, coarse=None) -> float:
+    """Mean quantization error of the model over the deterministic
+    training-rule sample (``orderBy(xxhash64(id)).limit`` of
+    ``FITNESS_SAMPLE`` rows) — per vector, the summed per-subspace
+    distance to the NEAREST codeword, i.e.
+    ||v − reconstruction(encode(v))||². With a ``coarse`` quantizer
+    (IVFADC) each vector first has its nearest centroid subtracted,
+    so the error is the RESIDUAL one. One Arrow-batched numpy pass
+    (the encoders' matrix shapes — Spark HOFs run interpreted and
     measured ~100× slower here); one sample-bounded job, never the
-    full corpus. Per-row errors are order-independent (fixed numpy
-    reduction order per row), so build-time and audit-time calls on
-    the same corpus return the identical double."""
+    full corpus. Per-row errors have a fixed numpy reduction order,
+    so build-time and audit-time calls on the same corpus return the
+    identical double."""
+    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    dsub = len(books[0][0])
-    bks = [[list(map(float, c)) for c in b] for b in books]
+    cbs = np.asarray(books, dtype="float64")
+    cc = None if coarse is None else np.asarray(coarse, dtype="float64")
+    dsub = cbs.shape[2]
 
     def _err(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        cbs = [np.asarray(b) for b in bks]
         x = np.vstack(vs.to_numpy()).astype("float64")
+        if cc is not None:
+            x = x - cc[((x[:, None, :] - cc[None]) ** 2).sum(axis=2).argmin(axis=1)]
         out = np.zeros(len(x))
         for s, cb in enumerate(cbs):
             sub = x[:, s * dsub : (s + 1) * dsub]
-            d2 = ((sub[:, None, :] - cb[None]) ** 2).sum(axis=2)
-            out += d2.min(axis=1)
+            out += ((sub[:, None, :] - cb[None]) ** 2).sum(axis=2).min(axis=1)
         return pd.Series(out)
 
     _err.__annotations__ = {"vs": pd.Series, "return": pd.Series}
     udf = pandas_udf(_err, "double").asNondeterministic()
     sample = (
-        df.select(
-            F.col(vec_col).alias("__v"),
-            F.xxhash64(F.col(id_col)).alias("__h"),
-        )
+        vecs.select(F.col("vec").alias("__v"), F.xxhash64("id").alias("__h"))
         .orderBy("__h")
-        .limit(int(sample_size))
+        .limit(FITNESS_SAMPLE)
     )
     row = (
         sample.select(udf(F.col("__v")).alias("__e"))
@@ -157,36 +183,11 @@ def _pq_mse(
     return float(row["mse"]) if row["mse"] is not None else 0.0
 
 
-def _write_fitness(
-    spark: SparkSession, index_path: str, mse: float, sample_n: int,
-    suffix: str = "",
-) -> None:
-    local_struct_df(
-        spark, "mse double, sample_n bigint",
-        [(float(mse), int(sample_n))],
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{index_path}/fitness{suffix}"
-    )
-
-
-def _read_fitness(spark: SparkSession, index_path: str) -> dict:
-    try:
-        r = spark.read.parquet(f"{index_path}/fitness").collect()[0]
-    except Exception as exc:
-        raise ValueError(
-            f"pq_index at {index_path} has no fitness sidecar (built "
-            "before drift auditing existed) — retrain_pq_index or "
-            "rebuild to establish the reference"
-        ) from exc
-    return {"mse": float(r["mse"]), "sample_n": int(r["sample_n"])}
-
-
 def pq_codebook_audit(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     index_path: str,
-    sample_size: int = 4096,
 ) -> dict:
     """Codebook-fitness drift audit — the PQ analog of
     ``cell_balance_audit``: re-measure the stored codebooks' mean
@@ -197,10 +198,14 @@ def pq_codebook_audit(
     ADC distances — and recall — have silently degraded and
     :func:`retrain_pq_index` is due. Needs the corpus because the
     index stores only 8-byte codes; cost is one sample-bounded job."""
-    spark = df.sparkSession
-    books, _params = load_pq_codebooks(spark, index_path)
-    ref = _read_fitness(spark, index_path)
-    now = _pq_mse(df, id_col, vec_col, books, sample_size)
+    return _audit(store.id_vec(df, id_col, vec_col), index_path, ivf=False)
+
+
+def _audit(vecs: DataFrame, index_path: str, ivf: bool) -> dict:
+    spark = vecs.sparkSession
+    coarse, books, _params = _load(spark, index_path, ivf)
+    ref = store.read_fitness(spark, index_path, _WHAT[ivf])
+    now = _quant_mse(vecs, books, coarse)
     return {
         "mse_now": now,
         "mse_build": ref["mse"],
@@ -230,60 +235,30 @@ def retrain_pq_index(
     codes table cannot be decoded back to vectors.
 
     Returns ``{"rows", "mse_before", "mse_after"}``."""
-    from nass_summary_spark.functions.fsio import remove_dir, swap_in
+    return _retrain(
+        store.id_vec(df, id_col, vec_col), index_path, n_iter, sample_size,
+        keep_backup, ivf=False,
+    )
 
-    spark = df.sparkSession
-    old_books, params = load_pq_codebooks(spark, index_path)
-    mse_before = _pq_mse(df, id_col, vec_col, old_books, FITNESS_SAMPLE)
-    books = pq_train(
-        df, id_col, vec_col, params["dim"], m=params["m"],
-        ksub=params["ksub"], n_iter=n_iter, sample_size=sample_size,
+
+def _retrain(
+    vecs: DataFrame,
+    index_path: str,
+    n_iter: int,
+    sample_size: int,
+    keep_backup: bool,
+    ivf: bool,
+) -> dict:
+    spark = vecs.sparkSession
+    old_coarse, old_books, params = _load(spark, index_path, ivf)
+    mse_before = _quant_mse(vecs, old_books, old_coarse)
+    tables, mse_after = _generation(vecs, params, n_iter, sample_size)
+    rows = vecs.count()
+    store.validated_rebuild(
+        spark, index_path, tables, rows, f"retrain_{_WHAT[ivf]}",
+        "__retraining", "__pre_retrain", keep_backup,
     )
-    tmp_codes = f"{index_path}/codes__retraining"
-    (
-        pq_encode(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "id", "vec", books,
-        )
-        .write.mode("overwrite")
-        .parquet(tmp_codes)
-    )
-    rows = df.count()
-    rewritten = spark.read.parquet(tmp_codes).count()
-    if rewritten != rows:
-        remove_dir(spark, tmp_codes)
-        raise RuntimeError(
-            f"retrain_pq_index validation failed for {index_path}: "
-            f"re-encoded {rewritten} rows, expected {rows}; live index "
-            "left untouched"
-        )
-    tmp_books = f"{index_path}/codebooks__retraining"
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_books)
-    mse_after = _pq_mse(df, id_col, vec_col, books, FITNESS_SAMPLE)
-    _write_fitness(
-        spark, index_path, mse_after, FITNESS_SAMPLE, suffix="__retraining"
-    )
-    swap_in(spark, f"{index_path}/codebooks", tmp_books,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/codes", tmp_codes,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/fitness",
-            f"{index_path}/fitness__retraining",
-            "__pre_retrain", keep_backup)
-    return {
-        "rows": rows,
-        "mse_before": mse_before,
-        "mse_after": mse_after,
-    }
+    return {"rows": rows, "mse_before": mse_before, "mse_after": mse_after}
 
 
 def load_pq_codebooks(
@@ -291,50 +266,26 @@ def load_pq_codebooks(
 ) -> tuple[list[list[list[float]]], dict]:
     """Read the model back (model-sized collect): (codebooks,
     {"dim", "m", "ksub"})."""
-    p = spark.read.parquet(f"{index_path}/params").collect()[0]
-    params = {"dim": p["dim"], "m": p["m"], "ksub": p["ksub"]}
-    dsub = params["dim"] // params["m"]
-    books = [
-        [[0.0] * dsub for _ in range(params["ksub"])]
-        for _ in range(params["m"])
-    ]
-    rows = spark.read.parquet(f"{index_path}/codebooks").collect()
-    # a codebooks relation whose geometry disagrees with the params
-    # sidecar means the index mixes generations — fail loudly here,
-    # before any probe can score with misaligned tables
-    if len(rows) != params["m"] * params["ksub"] * dsub or any(
-        r["subspace"] >= params["m"]
-        or r["code"] >= params["ksub"]
-        or r["pos"] >= dsub
-        for r in rows
-    ):
-        raise ValueError(
-            f"pq_index geometry mismatch at {index_path}: params say "
-            f"(dim={params['dim']}, m={params['m']}, "
-            f"ksub={params['ksub']}) but the codebooks table has "
-            f"{len(rows)} entries — the index mixes generations; "
-            "rebuild it"
-        )
-    for r in rows:
-        books[r["subspace"]][r["code"]][r["pos"]] = r["value"]
+    _coarse, books, params = _load(spark, index_path, ivf=False)
     return books, params
 
 
-def _check_codes_geometry(codes: DataFrame, params: dict, index_path: str) -> None:
-    """Loud-fail on a mixed-generation index: the codes table's
-    columns must match the params sidecar's ``m`` (code0..code{m-1}).
-    A codes relation written under a different PQ geometry would
-    otherwise score with misaligned LUT indices — silently wrong
-    distances, the exact failure dedup_index's params guard exists
-    to prevent."""
-    want = {f"code{s}" for s in range(params["m"])}
-    have = {c for c in codes.columns if c.startswith("code")}
-    if have != want:
-        raise ValueError(
-            f"pq_index geometry mismatch at {index_path}: params say "
-            f"m={params['m']} but codes table has columns "
-            f"{sorted(have)} — the index mixes generations; rebuild it"
+def _load(spark: SparkSession, index_path: str, ivf: bool) -> tuple:
+    """``(coarse, books, params)``, each model table checked against
+    the params sidecar's geometry."""
+    params = store.read_row(spark, f"{index_path}/params")
+    coarse = None
+    if ivf:
+        coarse = store.read_model(
+            spark, f"{index_path}/centroids", store.CENTROID_KEYS,
+            (params["k_cells"], params["dim"]), _WHAT[ivf],
         )
+    books = store.read_model(
+        spark, f"{index_path}/codebooks", store.CODEBOOK_KEYS,
+        (params["m"], params["ksub"], params["dim"] // params["m"]),
+        _WHAT[ivf],
+    )
+    return coarse, books, params
 
 
 def extend_pq_index(
@@ -348,13 +299,13 @@ def extend_pq_index(
     any appending sink, periodic compaction restores file sizes;
     under distribution drift the quantization error grows — re-train
     by rebuilding, the PQ analog of ``rebalance_ann_index``."""
-    books, _params = load_pq_codebooks(df.sparkSession, index_path)
-    (
-        pq_encode(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-                  "id", "vec", books)
-        .write.mode("append")
-        .parquet(f"{index_path}/codes")
-    )
+    _extend(store.id_vec(df, id_col, vec_col), index_path, ivf=False)
+
+
+def _extend(vecs: DataFrame, index_path: str, ivf: bool) -> None:
+    coarse, books, _params = _load(vecs.sparkSession, index_path, ivf)
+    codes = _encode(vecs, coarse, books)
+    store.write_tables(index_path, {"codes": codes}, mode="append")
 
 
 def pq_index_probe(
@@ -376,24 +327,42 @@ def pq_index_probe(
     ``exclude_ids`` (single ``id`` column, batch-sized broadcast)
     removes stored codes from the candidate side BEFORE ranking —
     the same crash-replay contract as ``ann_index_probe``."""
-    from nass_summary_spark.operators.pq import _adc_rank
-
-    books, params = load_pq_codebooks(spark, index_path)
-    codes = spark.read.parquet(f"{index_path}/codes")
-    _check_codes_geometry(codes, params, index_path)
-    if exclude_ids is not None:
-        codes = codes.join(
-            F.broadcast(exclude_ids.select("id")), "id", "left_anti"
-        )
-    ranked = _adc_rank(
-        spark,
-        codes,
-        queries,
-        id_col,
-        vec_col,
-        books,
-        params["dim"],
-        collect_queries=collect_queries,
-        code_id_col="id",
+    return _probe(
+        spark, queries, id_col, vec_col, index_path, k, collect_queries,
+        exclude_ids,
     )
+
+
+def _probe(
+    spark: SparkSession,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    index_path: str,
+    k: int,
+    collect_queries: bool | str,
+    exclude_ids: DataFrame | None,
+    nprobe: int | None = None,
+) -> DataFrame:
+    """ADC top-k over the stored codes; with ``nprobe`` (IVFADC) only
+    the probed cells' codes are scored. The codes must hold exactly
+    ``id``, ``code0..code{m-1}`` (and ``cell``) under the params
+    sidecar's ``m``."""
+    ivf = nprobe is not None
+    coarse, books, params = _load(spark, index_path, ivf)
+    columns = ["id"] + [f"code{s}" for s in range(params["m"])]
+    codes = store.read_codes(
+        spark, index_path, columns + (["cell"] if ivf else []),
+        _WHAT[ivf], exclude_ids,
+    )
+    kw = dict(collect_queries=collect_queries, code_id_col="id")
+    if ivf:
+        ranked = _ivfpq_rank(
+            spark, codes, queries, id_col, vec_col, coarse, books,
+            nprobe=nprobe, **kw,
+        )
+    else:
+        ranked = _adc_rank(
+            spark, codes, queries, id_col, vec_col, books, params["dim"], **kw
+        )
     return ranked.where(F.col("rnk") <= k)

@@ -34,11 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from nass_summary_spark.functions.fsio import hadoop_fs
 from nass_summary_spark.operators.ann_index import (
     ann_index_probe,
     extend_ann_index,
 )
-from nass_summary_spark.streaming.dedup_stream import _hadoop_fs
 
 
 def ann_ingest_stream(
@@ -58,7 +58,7 @@ def ann_ingest_stream(
 
     def probe_and_extend(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, marker = _hadoop_fs(
+        fs, marker = hadoop_fs(
             spark, f"{index_path}/_applied/batch_id={batch_id}"
         )
         new_ids = batch_df.select(F.col(id_col).alias("id")).distinct()

@@ -35,22 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from nass_summary_spark.functions.fsio import hadoop_fs
 from nass_summary_spark.operators.dedup_index import (
     _incremental_minhash_pairs_with_handle,
     extend_minhash_index,
 )
-
-
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` — marker existence/creation
-    must go through Hadoop's filesystem layer, not ``os.path``: with
-    an hdfs:// or s3a:// index the local-FS check is silently
-    always-False and every crash-replay would re-append the batch
-    (the exact duplication the marker exists to prevent). Shared
-    implementation in :mod:`nass_summary_spark.functions.fsio`."""
-    from nass_summary_spark.functions.fsio import hadoop_fs
-
-    return hadoop_fs(spark, path)
 
 
 def minhash_dedup_stream(
@@ -73,7 +62,10 @@ def minhash_dedup_stream(
 
     def probe_and_extend(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, marker = _hadoop_fs(
+        # the marker goes through Hadoop's FS, not os.path: on an
+        # hdfs:// or s3a:// index a local check never finds it, and
+        # every crash-replay would re-append the batch
+        fs, marker = hadoop_fs(
             spark, f"{index_path}/_applied/batch_id={batch_id}"
         )
         # probe first: replay-proof regardless of whether this batch

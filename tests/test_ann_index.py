@@ -297,3 +297,19 @@ def test_codes_compaction_preserves_probe(spark, tmp_path, emb):
         ann_index_probe(spark, q, "vec_id", "embedding", idx, k=5, nprobe=4)
     )
     assert after == before
+
+
+def test_truncated_centroids_fail_loudly(spark, tmp_path, emb):
+    """A centroids table missing one (cell, pos) entry — a truncated
+    or mixed-generation write — must raise instead of zero-filling
+    the hole and silently probing the wrong cells."""
+    idx = str(tmp_path / "ann")
+    build_ann_index(emb, "vec_id", "embedding", idx, k_cells=4, n_iter=2)
+    cent = spark.read.parquet(f"{idx}/centroids")
+    kept = cent.where(~((F.col("cell") == 1) & (F.col("pos") == 3)))
+    kept = kept.localCheckpoint()
+    kept.coalesce(1).write.mode("overwrite").parquet(f"{idx}/centroids")
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        load_centroids(spark, idx)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        ann_index_probe(spark, emb.limit(2), "vec_id", "embedding", idx)

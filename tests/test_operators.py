@@ -3062,3 +3062,20 @@ def test_global_rank_balanced_under_constant_keys(spark):
         .collect()
     )
     assert max(r["count"] for r in collapsed) == 50_000
+
+
+def test_fellegi_sunter_em_rejects_non_identifier_field(spark):
+    """EM field names are pasted into SQL text (``agree_{f}``) and a
+    DDL schema string (``m_{f} double``): a name that is not a plain
+    identifier must be refused up front, naming the field, on both
+    entry points."""
+    from nass_summary_spark.operators.linkage import (
+        fellegi_sunter_em,
+        fellegi_sunter_em_scores,
+    )
+
+    cand = spark.createDataFrame([(1,)], "`agree_a b` int")
+    with pytest.raises(ValueError, match="'a b'"):
+        fellegi_sunter_em(cand, ["a b"])
+    with pytest.raises(ValueError, match="'a b'"):
+        fellegi_sunter_em_scores(cand, ["a b"])

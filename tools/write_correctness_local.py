@@ -18,7 +18,7 @@ exact values (order-insensitive). Rows-only = declared approximate /
 stateful / non-SQL-expressible operators (verified against exact
 counterparts or properties in tests/). Generated by
 tools/verify_oracle.py in the DRIVER-FACING order
-(`__spark_entry__._DRIVER_WINDOW_R10` first, then natural
+(`__spark_entry__._DRIVER_WINDOW_R12` first, then natural
 registration order), so the first 50 rows here are exactly the
 driver gate's r10 window (the 28 r9 debuts + the first 22 of the
 r5-stale cohort) and this artifact diffs row-for-row against
